@@ -418,16 +418,17 @@ def _literal_df(spark, rows, schema: str):
     """Small literal frame via the Arrow path (pandas input): a plain
     createDataFrame(list) ships pickled rows that executors must spin a
     Python worker to decode — measured as seconds of per-build overhead
-    for k·64-scalar frames the JVM could hold directly. Falls back to the
-    pickle path if Arrow conversion (or pandas itself) is unavailable."""
-    try:
-        import pandas as pd
+    for k·64-scalar frames the JVM could hold directly. Column names are
+    the DDL's top-level fields: commas nested in <> or () do not split."""
+    import pandas as pd
 
-        cols = [f.strip().split()[0] for f in schema.split(",")]
-        pdf = pd.DataFrame(rows, columns=cols)
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    cols, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            cols.append(schema[start:i].split()[0])
+            start = i + 1
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
 
 
 def ivf_kmeans_build(spark, sf_dir, base_dir=None, force: bool = False) -> str:

@@ -9,17 +9,17 @@ emulates Iceberg snapshot semantics over parquet directories (FIXTURES.md
 (pmod(xxhash64(doc_id), n) — the explicit salting of the north rule, same
 defusal as AQE cannot give UDF stages).
 
-Write path — ONE job, per-bucket commits: all pending buckets are extracted
-in a single pass (a hash bucket is not prunable by any format, so per-bucket
-jobs would rescan the full input n_buckets times — 8× scan cost at 100 TB,
-with the cluster idle between jobs) and written `partitionBy(__bucket)` to a
-staging directory; each bucket directory is then atomically renamed into
-<out>/spans/bucket=<b>/ and its manifest JSON committed by atomic rename to
-<out>/_manifest/<b>.json. A rerun skips every bucket with a manifest and
-recomputes the rest in one new job; staged-or-renamed data without its
-manifest is overwritten (idempotent). Readers see only manifest-committed
-buckets. On Iceberg this maps 1:1 onto snapshot commits with bucket
-partition specs.
+Write path — ONE job, per-bucket commits, no re-read: all pending buckets
+are extracted in one pass (a hash bucket is not prunable by any format) and
+written `partitionBy(__bucket)` to a staging directory under an Observation
+that counts each bucket's rows and spans. Each bucket directory is then
+atomically renamed into <out>/spans/bucket=<b>/, its per-file rows read from
+the parquet footers locally (no Spark job) and checked to sum to the
+observed rows (else raise, bucket uncommitted), and its manifest JSON
+committed by atomic rename to <out>/_manifest/<b>.json. A rerun skips every
+bucket with a manifest and recomputes the rest in one new job; uncommitted
+data is overwritten (idempotent). Readers see only manifest-committed
+buckets. On Iceberg this maps 1:1 onto snapshot commits.
 """
 
 from __future__ import annotations
@@ -29,7 +29,8 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import __version__
@@ -50,6 +51,13 @@ def committed_buckets(out_dir: str) -> dict:
                     m = json.load(f)
                 out[int(m["bucket"])] = m
     return out
+
+
+def _file_rows(bucket_dir: str) -> dict:
+    """{data file basename: rows} from the parquet footers (no Spark job)."""
+    names = sorted(os.listdir(bucket_dir)) if os.path.isdir(bucket_dir) else []
+    return {n: pq.read_metadata(os.path.join(bucket_dir, n)).num_rows
+            for n in names if not n.startswith((".", "_")) and not n.endswith(".crc")}
 
 
 def _commit_manifest(out_dir: str, manifest: dict):
@@ -101,7 +109,6 @@ def extract_with_checkpoint(
     if not pending:
         return {"committed": committed, "skipped": skipped, "out_dir": out_dir}
 
-    spark = docs.sparkSession
     t0 = time.time()
     docs_in = docs
     if already:
@@ -114,8 +121,13 @@ def extract_with_checkpoint(
     out = extract_spans(docs_in, media, **extract_kwargs).withColumn(
         "__bucket", bucket_of(F.col("doc_id"), n_buckets)
     )
+    obs = Observation()  # manifest stats ride the write: rows, spans per bucket
+    hits = [(b, F.col("__bucket") == b) for b in pending]
+    stats = [F.count_if(h).alias(f"rows_{b}") for b, h in hits] + [
+        F.sum(F.when(h, F.size("spans")).otherwise(0)).alias(f"spans_{b}") for b, h in hits]
     staging = os.path.join(out_dir, "_staging")
-    out.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
+    out.observe(obs, *stats).write.mode("overwrite").partitionBy("__bucket").parquet(staging)
+    observed = obs.get  # lands with the write's completion event
     job_wall_ms = int((time.time() - t0) * 1000)
 
     spans_root = os.path.join(out_dir, "spans")
@@ -123,36 +135,23 @@ def extract_with_checkpoint(
     for b in pending:
         src = os.path.join(staging, f"__bucket={b}")
         dst = os.path.join(spans_root, f"bucket={b}")
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)  # uncommitted leftover from a crashed run
-        rows, n_spans, per_file = 0, 0, []
+        shutil.rmtree(dst, ignore_errors=True)  # uncommitted leftover of a crash
         if os.path.isdir(src):
             os.replace(src, dst)  # atomic publish
-            written = spark.read.parquet(dst)
-            rows = written.count()
-            n_spans = written.select(F.sum(F.size("spans"))).collect()[0][0] or 0
-            # per-output-partition lineage: one parquet file per write task
-            per_file = (
-                written.groupBy(F.input_file_name().alias("file"))
-                .count()
-                .collect()
-            )
-        _commit_manifest(
-            out_dir,
-            {
-                "bucket": b,
-                "n_buckets": n_buckets,
-                "rows": rows,
-                "spans": int(n_spans),
-                # one shared extraction job: the scan+OCR wall is paid once
-                # for all pending buckets, not once per bucket
-                "wall_ms": job_wall_ms,
-                "job_buckets": len(pending),
-                "engine_version": __version__,
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "files": {os.path.basename(r["file"]): r["count"] for r in per_file},
-            },
-        )
+        files, rows = _file_rows(dst), observed[f"rows_{b}"]
+        if sum(files.values()) != rows:
+            raise RuntimeError(f"bucket {b} left uncommitted: parquet footers hold "
+                               f"{sum(files.values())} rows, the write observed {rows}")
+        _commit_manifest(out_dir, {
+            "bucket": b, "n_buckets": n_buckets,
+            "rows": rows, "spans": observed[f"spans_{b}"] or 0,
+            # one shared extraction job: the scan+OCR wall is paid once
+            # for all pending buckets, not once per bucket
+            "wall_ms": job_wall_ms, "job_buckets": len(pending),
+            "engine_version": __version__,
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "files": files,  # lineage: one parquet file per write task
+        })
         committed.append(b)
         if fail_after is not None and len(committed) >= fail_after:
             raise RuntimeError(f"injected failure after {fail_after} buckets")

@@ -1212,3 +1212,38 @@ def test_ivf_kmeans_rebalance_storage_only(spark, tmp_path):
     assert os.path.basename(_cells_path(rebuilt)) == "cells.parquet"
     assert [tuple(r) for r in
             ivf_kmeans_search(spark, SF, rebuilt).collect()] == pre_src
+
+
+def test_literal_df_builds_nested_types_through_arrow(spark, monkeypatch):
+    """_literal_df names columns from the schema's top-level fields only, so
+    nested types (commas inside <> or ()) go through the Arrow path; with
+    Spark's own Arrow fallback off, any conversion failure would raise."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from manuscript_ocr_spark.functions.similarity import _literal_df
+
+    seen = []
+    create = spark.createDataFrame
+
+    def recording_create(data, schema=None, **kw):
+        seen.append(type(data))
+        return create(data, schema, **kw)
+
+    monkeypatch.setattr(spark, "createDataFrame", recording_create)
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        rows = [(1, [(1, 2), (3, 4)], Decimal("1.50")), (2, [], Decimal("0.25"))]
+        df = _literal_df(
+            spark, rows, "id int, pairs array<struct<a:int,b:int>>, amt decimal(10,2)"
+        )
+        got = [(r["id"], [tuple(p) for p in r["pairs"]], r["amt"])
+               for r in df.orderBy("id").collect()]
+    finally:
+        spark.conf.set(key, prev)
+    assert seen == [pd.DataFrame]
+    assert df.columns == ["id", "pairs", "amt"]
+    assert got == rows

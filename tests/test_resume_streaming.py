@@ -529,6 +529,124 @@ def test_resume_rejects_different_n_buckets(spark, small_tables, tmp_path):
         extract_with_checkpoint(docs, media, out_dir, n_buckets=4)
 
 
+def _reread_stats(spark, out_dir, b):
+    """Manifest fields recomputed by an independent Spark re-read of one
+    committed bucket: rows, total spans, and rows per file by basename."""
+    written = spark.read.parquet(os.path.join(out_dir, "spans", f"bucket={b}"))
+    per_file = written.groupBy(F.input_file_name().alias("f")).count().collect()
+    return {
+        "rows": written.count(),
+        "spans": written.select(F.sum(F.size("spans"))).collect()[0][0] or 0,
+        "files": {os.path.basename(r["f"]): r["count"] for r in per_file},
+    }
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_manifest_stats_equal_reread(spark, small_tables, tmp_path, monkeypatch, aqe):
+    """Manifest rows/spans/files come from the staged write (observed
+    metrics + parquet footers) and must equal a re-read of each committed
+    bucket; the commit loop itself starts no Spark job."""
+    import time
+
+    from manuscript_ocr_spark.operators import (
+        checkpoint,
+        committed_buckets,
+        extract_with_checkpoint,
+    )
+
+    docs, media = small_tables
+    out_dir = str(tmp_path / f"ckpt-aqe-{aqe}")
+    sc = spark.sparkContext
+    group = f"ckpt-commit-loop-{aqe}"
+    footer_rows = checkpoint._file_rows
+
+    def tagged_file_rows(d):  # first call: the write has finished
+        sc.setJobGroup(group, "checkpoint commit loop")
+        return footer_rows(d)
+
+    monkeypatch.setattr(checkpoint, "_file_rows", tagged_file_rows)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        res = extract_with_checkpoint(docs, media, out_dir, n_buckets=8)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    time.sleep(1)  # let the status store catch up with any stray job
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    manifests = committed_buckets(out_dir)
+    assert sorted(res["committed"]) == sorted(manifests) == list(range(8))
+    assert sum(m["rows"] for m in manifests.values()) == docs.count()
+    for b, m in manifests.items():
+        if m["rows"] == 0:
+            assert (m["spans"], m["files"]) == (0, {})
+            continue
+        want = _reread_stats(spark, out_dir, b)
+        assert {k: m[k] for k in want} == want, b
+
+
+def test_empty_buckets_commit_zero_and_stay_skipped(spark, small_tables, tmp_path):
+    """More buckets than docs: every empty bucket still commits a manifest
+    with rows=0, spans=0, files={} and is skipped on resume."""
+    from manuscript_ocr_spark.operators import (
+        bucket_of,
+        committed_buckets,
+        extract_with_checkpoint,
+    )
+
+    docs, media = small_tables
+    few = docs.orderBy("doc_id").limit(3).cache()
+    full = {r["b"] for r in few.select(bucket_of(F.col("doc_id"), 8).alias("b")).collect()}
+    out_dir = str(tmp_path / "ckpt-empty")
+    res = extract_with_checkpoint(few, media, out_dir, n_buckets=8)
+    assert sorted(res["committed"]) == list(range(8))
+    manifests = committed_buckets(out_dir)
+    for b in set(range(8)) - full:
+        assert (manifests[b]["rows"], manifests[b]["spans"], manifests[b]["files"]) == (0, 0, {})
+    for b in full:
+        want = _reread_stats(spark, out_dir, b)
+        assert {k: manifests[b][k] for k in want} == want
+    again = extract_with_checkpoint(few, media, out_dir, n_buckets=8)
+    assert again["committed"] == [] and again["skipped"] == list(range(8))
+    few.unpersist()
+
+
+def test_manifest_cross_check_blocks_commit(spark, small_tables, tmp_path, monkeypatch):
+    """Footer rows that disagree with the write's observed rows must raise,
+    name the bucket and leave it without a manifest; a clean rerun commits it."""
+    from manuscript_ocr_spark.operators import (
+        checkpoint,
+        committed_buckets,
+        extract_with_checkpoint,
+        read_checkpointed,
+    )
+    from manuscript_ocr_spark.pipeline import extract_spans
+
+    docs, media = small_tables
+    out_dir = str(tmp_path / "ckpt-xcheck")
+    footer_rows = checkpoint._file_rows
+
+    def skewed_file_rows(d):
+        files = footer_rows(d)
+        if d.endswith("bucket=1"):
+            files["phantom.parquet"] = 1
+        return files
+
+    monkeypatch.setattr(checkpoint, "_file_rows", skewed_file_rows)
+    with pytest.raises(RuntimeError, match="bucket 1 left uncommitted"):
+        extract_with_checkpoint(docs, media, out_dir, n_buckets=4)
+    assert sorted(committed_buckets(out_dir)) == [0]
+    assert not os.path.exists(os.path.join(out_dir, "_manifest", "1.json"))
+
+    monkeypatch.undo()
+    res = extract_with_checkpoint(docs, media, out_dir, n_buckets=4)
+    assert res["skipped"] == [0] and res["committed"] == [1, 2, 3]
+    got = _spans_key(read_checkpointed(spark, out_dir).collect())
+    assert got == _spans_key(extract_spans(docs, media).collect())
+
+
 def test_incremental_sink_idempotent_on_replay(spark, small_tables, tmp_path):
     """Crash window: sink written but streaming commit not yet recorded.
     Simulated by deleting the last commit marker — the replayed batch must
