@@ -1,8 +1,8 @@
 """Numpy neural-net primitives for executing converted reference checkpoints.
 
-Pure-numpy, inference-only twins of the torch ops the reference models use
-(torch absent in this sandbox; models/torch_twins.py covers torch-equipped
-hosts). Numerics follow torch's eval-mode definitions exactly:
+Pure-numpy, inference-only twins of the torch ops the reference models use,
+so models/numpy_twins.py runs real checkpoints without torch. Numerics
+follow torch's eval-mode definitions exactly:
 
 - conv2d: NCHW cross-correlation via im2col + GEMM (single BLAS call per
   layer — the multithreading knob is the executor task count, BLAS itself is
@@ -10,7 +10,7 @@ hosts). Numerics follow torch's eval-mode definitions exactly:
 - batch_norm (eval): (x - running_mean) / sqrt(running_var + eps) * w + b.
 - max_pool2d with padding semantics of nn.MaxPool2d (pad with -inf).
 - bilinear 2x upsample with align_corners=False (torch's default, used by
-  both the EAST decoder twin and TF.interpolate in torch_twins).
+  the reference EAST decoder).
 - LSTM cell / sequence with torch gate order (i, f, g, o) and the
   bidirectional + Linear(2H, H) composition of the reference's
   BidirectionalLSTM (reference model.py:323-335).

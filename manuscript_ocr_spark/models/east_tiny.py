@@ -223,17 +223,11 @@ def forward(image: np.ndarray, score_thresh: float):
     return score, geo
 
 
-def detect_quads(image: np.ndarray, cfg: DetectorConfig) -> np.ndarray:
-    """The reference EAST.predict post-processing chain (infer.py:300-356),
-    returning final (N, 9) float32 quads in original-image coordinates."""
-    orig_h, orig_w = image.shape[:2]
-    if (orig_h, orig_w) != (cfg.target_size, cfg.target_size):
-        resized = resize(image, cfg.target_size, cfg.target_size, interp="linear")
-    else:
-        resized = image
-
-    score_map, geo_map = forward(resized, cfg.score_thresh)
-
+def postprocess_maps(score_map: np.ndarray, geo_map: np.ndarray, orig_hw,
+                     cfg: DetectorConfig) -> np.ndarray:
+    """Score/geo maps of a target_size page → final (N, 9) float32 quads in
+    original-image coordinates: the reference chain after the forward
+    (infer.py:300-356). Every detector forward feeds this one chain."""
     quads = decode_quads_from_maps(
         score_map=score_map,
         geo_map=geo_map,
@@ -243,7 +237,7 @@ def detect_quads(image: np.ndarray, cfg: DetectorConfig) -> np.ndarray:
     )
     quads = locality_aware_nms(quads, iou_threshold=cfg.iou_threshold)
     quads = expand_boxes(quads, expand_w=cfg.expand_ratio_w, expand_h=cfg.expand_ratio_h)
-    quads = scale_boxes_to_original(quads, (orig_h, orig_w), cfg.target_size)
+    quads = scale_boxes_to_original(quads, orig_hw, cfg.target_size)
     quads = remove_fully_contained_boxes(quads)
     quads = remove_area_anomalies(
         quads,
@@ -254,3 +248,19 @@ def detect_quads(image: np.ndarray, cfg: DetectorConfig) -> np.ndarray:
     if cfg.axis_aligned_output:
         quads = convert_to_axis_aligned(quads)
     return quads
+
+
+def resize_to_target(image: np.ndarray, cfg: DetectorConfig) -> np.ndarray:
+    """The detector input: the page resized to target_size², or the page
+    itself when it already has that shape."""
+    if image.shape[:2] != (cfg.target_size, cfg.target_size):
+        return resize(image, cfg.target_size, cfg.target_size, interp="linear")
+    return image
+
+
+def detect_quads(image: np.ndarray, cfg: DetectorConfig) -> np.ndarray:
+    """The reference EAST.predict chain (infer.py:300-356) over the stand-in
+    forward, returning final (N, 9) float32 quads in original-image
+    coordinates."""
+    score_map, geo_map = forward(resize_to_target(image, cfg), cfg.score_thresh)
+    return postprocess_maps(score_map, geo_map, image.shape[:2], cfg)

@@ -1,12 +1,11 @@
 """Real-model weights-loader contract (SURVEY.md §9.4).
 
-The sandbox executes the seeded glyph stand-ins (no torch here), but a
-production swap to the reference's real EAST/TRBA checkpoints must be
-DATA-only: this module declares the exact state_dict layout the reference
-models produce, validates a checkpoint against it in pure numpy, and packs
-it into the same broadcast/serialize shape the pipeline already ships.
-When a torch-side kernel is plugged in (same predict() contract), nothing
-else in the pipeline changes — weights still arrive as one broadcast blob.
+A swap from the seeded glyph stand-ins to the reference's real EAST/TRBA
+checkpoints is DATA-only: this module declares the exact state_dict layout
+the reference models produce, validates a checkpoint against it in pure
+numpy, and packs it into the same broadcast/serialize shape the pipeline
+already ships. models/numpy_twins.py executes the result (selected by
+models/backend.py); weights still arrive as one broadcast blob.
 
 Layouts transcribed from the reference:
 - EAST decoder blocks + output head:
@@ -206,13 +205,10 @@ def build_real_weights(
     charset: list[str],
     hidden_size: int = 256,
     max_len: int = 25,
-    cnn_factory: str | None = None,
 ) -> dict:
     """Combined real-model weights for pipeline.extract_spans(weights=...):
-    both checkpoints validated/converted, plus the charset and the dotted
-    'module:callable' path of the SE-ResNet-31 backbone factory
-    (factory(cnn_tensors) → forward callable; see torch_twins docstring).
-    The result serializes to ONE broadcast npz like the stand-in bank."""
+    both checkpoints validated/converted, plus the charset. The result
+    serializes to ONE broadcast npz like the stand-in bank."""
     east = convert_state_dict(east_state_dict, "east")
     trba = convert_state_dict(
         trba_state_dict, "trba", charset=charset, hidden_size=hidden_size
@@ -222,7 +218,6 @@ def build_real_weights(
         "kind": "real_models",
         "east": east,
         "trba": trba,
-        "cnn_factory": cnn_factory,
         # top-level charset mirrors the stand-in bank so shared code paths
         # (metrics, vis) can read it without caring which kind this is
         "itos": list(charset),
@@ -238,7 +233,6 @@ def serialize_real_weights(weights: dict) -> bytes:
         "__itos__": np.array(weights["itos"], dtype=object),
         "__max_len__": np.array(weights["trba"].get("max_len", 25)),
         "__hidden_size__": np.array(weights["trba"]["hidden_size"]),
-        "__cnn_factory__": np.array(weights.get("cnn_factory") or ""),
         # decode mode must ride the broadcast blob: the reference's predict
         # defaults to beam, and a worker that silently fell back to greedy
         # would produce different spans than the driver-side oracle
@@ -259,7 +253,6 @@ def deserialize_real_weights(data) -> dict:
         "kind": "real_models",
         "itos": itos,
         "stoi": stoi,
-        "cnn_factory": str(data["__cnn_factory__"]) or None,
         "decoding": (str(data["__decoding__"])
                      if "__decoding__" in data.files else "greedy"),
         "east": {"kind": "east_state", "tensors": {}},

@@ -90,8 +90,8 @@ def decode_media(pixels: bytes, height: int, width: int, channels: int) -> np.nd
     return arr.reshape(height, width, channels)
 from .kernels.ordering import reading_order_line_index_groups
 from .kernels.textproc import strip_boilerplate
-from .models.east_tiny import DetectorConfig, detect_quads
-from .models.trba_tiny import predict as trba_predict
+from .models.backend import load_backend
+from .models.east_tiny import DetectorConfig
 
 # output span kinds
 KIND_TEXT = "text"
@@ -113,81 +113,12 @@ def page_to_line_texts(
     re-association), min_text_size filter, clamp-crop, recognize, zip — then
     the get_text flatten per line (see module docstring).
 
-    Dispatch seam: weights['kind'] == 'real_models' (loader.build_real_weights,
-    a converted EAST+TRBA checkpoint pair) routes detect/recognize through
-    the torch twins (models.torch_twins) when torch is importable, else the
-    pure-numpy twins (models.numpy_twins — same converted tensors, torch
-    eval-mode numerics, built-in SE-ResNet-31 so cnn_factory is optional).
-    Same contracts, real nets; anything else takes the deterministic
-    stand-ins. Nothing downstream differs.
+    The detector and recognizer come from models.backend.load_backend:
+    the deterministic stand-ins, the converted real checkpoints on the numpy
+    twins, or the realistic-bench burn. Nothing downstream differs.
     """
-    if weights.get("kind") == "realistic_bench":
-        # model-realistic bench tier: burn one calibrated real-EAST numpy
-        # forward per page (cost only), then produce the DETERMINISTIC
-        # stand-in output — identical spans, realistic compute fraction
-        from .models.numpy_twins import realistic_burn
-
-        realistic_burn(image, weights)
-        return page_to_line_texts(image, weights["standin"], cfg, min_text_size)
-    if weights.get("kind") == "real_models":
-        from .models.torch_twins import HAVE_TORCH
-
-        # reference predict() defaults to beam (__init__.py:290-300);
-        # weights['decoding'] selects it here. The torch twin only wires
-        # greedy, so beam routes through the numpy twin (same converted
-        # tensors, same numerics).
-        decoding = weights.get("decoding", "greedy")
-        use_torch = (
-            HAVE_TORCH and weights.get("cnn_factory") and decoding == "greedy"
-        )
-        if use_torch:
-            from .models import torch_twins as twins
-        else:
-            from .models import numpy_twins as twins
-            if decoding != "greedy" and not any(
-                k.startswith("cnn.") for k in weights["trba"]["tensors"]
-            ):
-                # a cnn_factory forward is torch-contract (tensor in/out) —
-                # it cannot serve the numpy beam path, and without cnn.*
-                # passthrough tensors the numpy twin's built-in SE-ResNet-31
-                # has nothing to run. Fail HERE with a clear message rather
-                # than letting every executor task crash on a
-                # numpy-into-torch TypeError.
-                raise ValueError(
-                    f"decoding={decoding!r} runs on the numpy twin, which "
-                    "needs the checkpoint's cnn.* tensors (the torch "
-                    "cnn_factory forward is tensor-contract and cannot be "
-                    "reused); this checkpoint carries none"
-                )
-
-        quads = twins.detect_quads(image, cfg, weights["east"])
-
-        def _recognize(crops):
-            # greedy keeps the pre-existing contract: the factory product
-            # serves whichever twin was selected (with torch absent, a
-            # present factory is necessarily numpy-contract). Beam is the
-            # one divergence: it can force the numpy twin while torch IS
-            # importable, where the factory product is torch-contract and
-            # would crash inside numpy — so beam always runs the built-in
-            # cnn.* backbone and never resolves the factory.
-            cnn = None
-            if decoding == "greedy" and weights.get("cnn_factory"):
-                cnn = weights.get("_cnn_forward")
-                if cnn is None:
-                    import importlib
-
-                    mod, fn = weights["cnn_factory"].split(":")
-                    cnn = getattr(importlib.import_module(mod), fn)(
-                        weights["trba"]["tensors"]
-                    )
-                    weights["_cnn_forward"] = cnn  # per-worker memo
-            return twins.predict(crops, weights["trba"], mode=decoding,
-                                 cnn_forward=cnn)
-
-        recognize = _recognize
-    else:
-        quads = detect_quads(image, cfg)
-        recognize = lambda crops: trba_predict(crops, weights)  # noqa: E731
+    backend = load_backend(weights)
+    quads = backend.detect(image, cfg)
 
     # polygon → int32 bbox exactly as the reference (_pipeline.py:106-109)
     boxes = []
@@ -214,10 +145,7 @@ def page_to_line_texts(
                     crops.append(region)
                     kept.append(li)
 
-    if crops:
-        results = recognize(crops)
-    else:
-        results = []
+    results = backend.recognize(crops) if crops else []
 
     # zip texts back per line (_pipeline.py:149-162), join per line like
     # get_text joins words (" ") and skips empty (`if texts:`)

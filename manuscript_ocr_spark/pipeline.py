@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernels.textproc import BOILERPLATE_TAGS, BOILERPLATE_TAG_RES, WHITESPACE_RE
+from .models.backend import load_backend
 from .models.east_tiny import DetectorConfig
 from .models.glyphs import build_weights, deserialize_weights, serialize_weights
 from .oracle import KIND_OCR, KIND_TEXT, DEFAULT_MIN_TEXT_SIZE
@@ -343,35 +344,7 @@ def extract_spans(
         cfg = DetectorConfig()
     if weights is None:
         weights = build_weights()
-    if weights.get("kind") == "real_models":
-        # validate on the DRIVER, not as a storm of executor tracebacks.
-        # The real-model path runs on torch (twins) when available, else the
-        # pure-numpy twins — which execute the checkpoint's cnn.* tensors
-        # through the built-in SE-ResNet-31, so torch is no longer required.
-        # What IS required: a resolvable recognizer backbone — either a
-        # cnn_factory dotted path or cnn.* passthrough tensors (r3 ADVICE:
-        # cnn_factory=None used to die per-task on executors).
-        if not any(k.startswith("backbone.") for k in weights["east"]["tensors"]):
-            raise ValueError(
-                "real_models EAST weights carry no backbone.* tensors; the "
-                "detector has no feature extractor to run (convert a full "
-                "checkpoint including the resnet backbone)"
-            )
-        factory = weights.get("cnn_factory")
-        if factory:
-            # resolve the dotted path HERE so a typo fails before any task
-            import importlib
-
-            mod, fn = factory.split(":")
-            getattr(importlib.import_module(mod), fn)
-        elif not any(k.startswith("cnn.") for k in weights["trba"]["tensors"]):
-            raise ValueError(
-                "real_models weights carry neither a cnn_factory path nor "
-                "cnn.* backbone tensors; the recognizer has no conv "
-                "feature extractor to run (pass cnn_factory to "
-                "build_real_weights or convert a checkpoint that includes "
-                "the SE-ResNet-31 tensors)"
-            )
+    load_backend(weights)  # validate on the driver, before any task runs
     weights_bc = spark.sparkContext.broadcast(serialize_weights(weights))
 
     # --- text-span path: array-native, zero shuffle -----------------------

@@ -8,9 +8,9 @@ Three layers of proof:
    state_dicts (every key the real checkpoints carry: resnet50 backbone,
    EAST decoder/heads, SE-ResNet-31 cnn, TRBA encoder/decoder) through
    loader.convert_state_dict → page_to_line_texts, deterministically.
-3. The driver-side validation in extract_spans rejects real_models weights
-   with no runnable backbone (r3 ADVICE: cnn_factory=None used to die
-   per-task on executors; a missing EAST backbone would too).
+3. models/backend.load_backend rejects real_models weights with no runnable
+   backbone — on the driver in extract_spans and per page in the oracle —
+   and never writes into the weights it runs.
 """
 
 from __future__ import annotations
@@ -193,10 +193,8 @@ def test_page_to_line_texts_from_converted_checkpoint(real_weights):
     and deterministically — from a converted real-layout state_dict, with
     no torch in the environment."""
     from manuscript_ocr_spark.models.east_tiny import DetectorConfig
-    from manuscript_ocr_spark.models.torch_twins import HAVE_TORCH
     from manuscript_ocr_spark.oracle import page_to_line_texts
 
-    assert not HAVE_TORCH  # this sandbox: proves the numpy path serves
     img = np.full((128, 128), 255, np.uint8)
     img[30:50, 20:100] = 20
     img[70:90, 20:100] = 20
@@ -218,7 +216,15 @@ def test_real_weights_npz_roundtrip_executes(real_weights):
 
     back = deserialize_weights(serialize_weights(real_weights))
     assert back["kind"] == "real_models"
-    crop = np.full((16, 40), 128, np.uint8)
+    assert back["itos"] == CHARSET
+    assert back["trba"]["hidden_size"] == 32 and back["trba"]["max_len"] == 25
+    assert set(back["east"]["tensors"]) == set(real_weights["east"]["tensors"])
+    assert set(back["trba"]["tensors"]) == set(real_weights["trba"]["tensors"])
+    np.testing.assert_array_equal(
+        back["east"]["tensors"]["output_head.geo_map.weight"],
+        real_weights["east"]["tensors"]["output_head.geo_map.weight"],
+    )
+    crop =np.full((16, 40), 128, np.uint8)
     r1 = predict([crop], back["trba"])
     r2 = predict([crop], real_weights["trba"])
     assert r1[0]["text"] == r2[0]["text"]
@@ -245,19 +251,6 @@ def test_extract_spans_rejects_backboneless_real_weights():
     spark = get_spark(master="local[2]", app_name="np-twins-validate")
     docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
     with pytest.raises(ValueError, match="backbone"):
-        extract_spans(docs, media, weights=w)
-
-
-def test_extract_spans_rejects_unresolvable_cnn_factory(real_weights):
-    from manuscript_ocr_spark.fixtures import ensure_tier
-    from manuscript_ocr_spark.pipeline import extract_spans, load_fixture_tables
-    from manuscript_ocr_spark.session import get_spark
-
-    w = dict(real_weights)
-    w["cnn_factory"] = "no_such_module:factory"
-    spark = get_spark(master="local[2]", app_name="np-twins-validate2")
-    docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
-    with pytest.raises(ModuleNotFoundError):
         extract_spans(docs, media, weights=w)
 
 
@@ -350,11 +343,14 @@ def test_beam_mode_through_page_to_line_texts(real_weights):
 
 
 def test_unknown_mode_raises_on_twin(real_weights):
+    from manuscript_ocr_spark.models.backend import load_backend
     from manuscript_ocr_spark.models.numpy_twins import predict
 
     with pytest.raises(ValueError, match="Unknown mode"):
         predict([np.zeros((8, 8), np.uint8)], real_weights["trba"],
                 mode="viterbi")
+    with pytest.raises(ValueError, match="decoding='viterbi'"):
+        load_backend(dict(real_weights, decoding="viterbi"))
 
 
 def test_beam_decoding_rides_broadcast_to_executors(spark, real_weights):
@@ -407,34 +403,77 @@ def test_beam_decoding_rides_broadcast_to_executors(spark, real_weights):
         assert got_lines == list(lines)
 
 
-def test_beam_never_resolves_cnn_factory(real_weights):
-    """Beam forces the numpy twin even when a torch-contract cnn_factory is
-    configured — the factory must NOT be resolved (its product would crash
-    inside numpy), the built-in cnn.* backbone serves instead; and a
-    checkpoint with NO cnn.* tensors fails fast on the beam path with a
-    clear message instead of a per-task numpy-into-torch TypeError."""
-    import numpy as np
+# --- 5. the backend seam ----------------------------------------------------
 
+
+@pytest.mark.parametrize("decoding", ["greedy", "beam"])
+def test_cnnless_real_weights_rejected_everywhere(spark, real_weights, decoding):
+    """Without cnn.* tensors the recognizer has no backbone to run, whatever
+    the decoding: load_backend, the oracle page path (even on a blank page
+    that never reaches the recognizer) and extract_spans on the driver all
+    raise the same ValueError."""
+    from manuscript_ocr_spark.fixtures import ensure_tier
+    from manuscript_ocr_spark.models.backend import load_backend
     from manuscript_ocr_spark.models.east_tiny import DetectorConfig
     from manuscript_ocr_spark.oracle import page_to_line_texts
+    from manuscript_ocr_spark.pipeline import extract_spans, load_fixture_tables
 
-    img = np.full((128, 128), 255, np.uint8)
-    img[30:50, 20:100] = 20
-    cfg = DetectorConfig(target_size=128)
-
-    w = dict(real_weights)
-    w["decoding"] = "beam"
-    w["cnn_factory"] = "nonexistent.module:boom"  # must never be imported
-    lines = page_to_line_texts(img, w, cfg)
-    assert isinstance(lines, list)
-    assert "_cnn_forward" not in w  # factory untouched on the beam path
-
-    w2 = dict(real_weights)
-    w2["decoding"] = "beam"
-    w2["trba"] = dict(real_weights["trba"])
-    w2["trba"]["tensors"] = {
+    w = dict(real_weights, decoding=decoding)
+    w["trba"] = dict(real_weights["trba"])
+    w["trba"]["tensors"] = {
         k: v for k, v in real_weights["trba"]["tensors"].items()
         if not k.startswith("cnn.")
     }
-    with pytest.raises(ValueError, match="cnn\\.\\* tensors"):
-        page_to_line_texts(img, w2, cfg)
+    cfg = DetectorConfig(target_size=128)
+    text = np.full((128, 128), 255, np.uint8)
+    text[30:50, 20:100] = 20
+    blank = np.full((128, 128), 255, np.uint8)
+    with pytest.raises(ValueError, match=r"cnn\.\*") as e_backend:
+        load_backend(w)
+    for img in (text, blank):
+        with pytest.raises(ValueError, match=r"cnn\.\*") as e_page:
+            page_to_line_texts(img, w, cfg)
+        assert str(e_page.value) == str(e_backend.value)
+    docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
+    with pytest.raises(ValueError, match=r"cnn\.\*") as e_driver:
+        extract_spans(docs, media, weights=w)
+    assert str(e_driver.value) == str(e_backend.value)
+
+
+def _key_tree(obj):
+    """Key sets at every dict nesting level (values other than dicts are
+    leaves)."""
+    if isinstance(obj, dict):
+        return {k: _key_tree(v) for k, v in obj.items()}
+    return None
+
+
+@pytest.mark.parametrize("kind", ["standin", "real_models", "realistic_bench"])
+def test_page_path_leaves_weights_untouched(kind):
+    """load_backend is pure: two page_to_line_texts calls add no memo keys
+    at any nesting level of the weights and return equal lines."""
+    from manuscript_ocr_spark.models.east_tiny import DetectorConfig
+    from manuscript_ocr_spark.models.glyphs import build_weights
+    from manuscript_ocr_spark.models.loader import build_real_weights
+    from manuscript_ocr_spark.models.numpy_twins import (
+        build_realistic_weights,
+        synthetic_state_dicts,
+    )
+    from manuscript_ocr_spark.oracle import page_to_line_texts
+
+    # fresh weights: a fixture earlier tests already ran could hide added keys
+    w = {
+        "standin": build_weights,
+        "real_models": lambda: build_real_weights(
+            *synthetic_state_dicts(CHARSET, hidden_size=32), CHARSET,
+            hidden_size=32),
+        "realistic_bench": lambda: build_realistic_weights(target_size=128),
+    }[kind]()
+    before = _key_tree(w)
+    img = np.full((128, 128), 255, np.uint8)
+    img[30:50, 20:100] = 20
+    cfg = DetectorConfig(target_size=128)
+    lines1 = page_to_line_texts(img, w, cfg)
+    lines2 = page_to_line_texts(img, w, cfg)
+    assert lines1 == lines2
+    assert _key_tree(w) == before
