@@ -1,6 +1,5 @@
 """Scale/robustness operators: salted bucketing + per-partition
-checkpoint/commit/resume (checkpoint.py), per-task OCR metrics
-(pipeline.split_ocr_metrics)."""
+checkpoint/commit/resume (checkpoint.py)."""
 
 from .checkpoint import (
     bucket_of,

@@ -31,7 +31,6 @@ Plan shape (scale rationale, SURVEY.md §7):
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,12 +44,9 @@ from .oracle import KIND_OCR, KIND_TEXT, DEFAULT_MIN_TEXT_SIZE
 # One output row PER PAGE (lines as an array), not per line: the
 # media_spans ⋈ ocr join and the per-doc regroup then shuffle ~10x fewer
 # rows (pages average ~10 lines), and line order rides inside the array
-# instead of a seq sort key.
-OCR_LINES_SCHEMA = "media_ref string, lines array<string>"
-METRICS_SENTINEL = "__task_metrics__"
-OUT_SPANS_FIELD = (
-    "array<struct<kind:string,text:string,media_ref:string,offset:int,seq:int>>"
-)
+# instead of a seq sort key. `error` is null unless on_error="skip" caught
+# a bad page (then `lines` is null).
+OCR_LINES_SCHEMA = "media_ref string, lines array<string>, error string"
 
 # per-worker deserialized weights cache (broadcast bytes → dict, once).
 # Keyed by id(blob) BUT the blob itself is stored in the value: that keeps
@@ -77,67 +73,49 @@ def make_ocr_udf(
     weights_bc,
     cfg: DetectorConfig,
     min_text_size: int,
-    emit_metrics: bool = False,
     on_error: str = "fail",
 ):
-    """mapInPandas UDF: media rows → (media_ref, lines array) page rows.
+    """mapInPandas UDF: media rows → one (media_ref, lines, error) row per
+    page.
 
     All tensor/image work stays inside this Arrow-batched function — score
     and geometry maps never become Spark columns (SURVEY.md §1.1). Weights
     arrive via SparkContext.broadcast (north_rule: "model weights broadcast
     to executors"; the reference's analog is the one-time weight download +
-    cache, infer.py:96-107)."""
+    cache, infer.py:96-107).
+
+    on_error="fail" raises on a page that fails to decode or OCR (the
+    reference's raise-on-bad-input behavior, kept for the invariant path);
+    "skip" returns that page with null lines and error =
+    "<exception class>: <message>", so a handful of corrupt payloads at
+    10^12 scale neither kill the job nor vanish."""
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"on_error={on_error!r}; expected 'fail' or 'skip'")
 
     def ocr_batches(iterator):
-        import time as _time
-
-        from pyspark import TaskContext
-
         from .oracle import decode_media, page_to_line_texts
 
-        t_start = _time.time()
         weights = _get_weights(weights_bc.value)
-        n_pages = 0
-        n_errors = 0
         for pdf in iterator:
-            refs, page_lines = [], []
-            for ref, h, w, c, px in zip(
-                pdf["media_ref"], pdf["height"], pdf["width"], pdf["channels"], pdf["pixels"]
+            page_lines, errors = [], []
+            for h, w, c, px in zip(
+                pdf["height"], pdf["width"], pdf["channels"], pdf["pixels"]
             ):
                 try:
                     image = decode_media(px, int(h), int(w), int(c))
-                    lines = page_to_line_texts(image, weights, cfg, min_text_size)
-                except Exception:
-                    # at 10^12 scale a handful of corrupt payloads must not
-                    # kill the job: skip the page, count it in the task
-                    # metrics (on_error='fail' keeps the reference's
-                    # raise-on-bad-input behavior for the invariant path)
+                    lines = list(page_to_line_texts(image, weights, cfg, min_text_size))
+                    error = None
+                except Exception as e:
                     if on_error != "skip":
                         raise
-                    n_errors += 1
-                    continue
-                refs.append(ref)
-                page_lines.append(list(lines))
-                n_pages += 1
+                    lines, error = None, f"{type(e).__name__}: {e}"
+                page_lines.append(lines)
+                errors.append(error)
             yield pd.DataFrame(
                 {
-                    "media_ref": pd.Series(refs, dtype="object"),
+                    "media_ref": pdf["media_ref"],
                     "lines": pd.Series(page_lines, dtype="object"),
-                }
-            )
-        if emit_metrics:
-            # one sentinel row per task: partition id, pages, wall ms,
-            # errors — per-partition lineage/latency metrics with zero extra
-            # pass (north_rule; reference analog: per-run timing stats, A8)
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else -1
-            wall_ms = int((_time.time() - t_start) * 1000)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pd.Series([METRICS_SENTINEL], dtype="object"),
-                    "lines": pd.Series(
-                        [[f"{pid}|{n_pages}|{wall_ms}|{n_errors}"]], dtype="object"
-                    ),
+                    "error": pd.Series(errors, dtype="object"),
                 }
             )
 
@@ -232,22 +210,22 @@ def ocr_media_lines(
     cfg: DetectorConfig,
     min_text_size: int = DEFAULT_MIN_TEXT_SIZE,
     ocr_partitions: int | None = None,
-    emit_metrics: bool = False,
     on_error: str = "fail",
     broadcast_refs: bool | None = None,
     max_broadcast_refs: int = MAX_BROADCAST_REFS,
 ) -> DataFrame:
     """OCR every page in `media` that appears in `refs` (distinct media_ref
-    column) → DataFrame(media_ref, lines array<string>), each page exactly
-    once, line order inside the array.
-    With emit_metrics, one extra sentinel row per task (media_ref =
-    METRICS_SENTINEL, seq = partition id, text = "pages|wall_ms") rides the
-    same output — split it off with split_ocr_metrics.
+    column) → DataFrame(media_ref, lines array<string>, error string), one
+    row per page, each page exactly once, line order inside the array.
+    on_error: see make_ocr_udf. Pages per task:
+    groupBy(F.spark_partition_id()).count() over the result; task wall
+    times are in Spark's own task metrics (event log).
 
     broadcast_refs: True forces a broadcast semi-join (refs known small),
     False forces the shuffle-hash path, None (default) probes the refs size
     with an early-stopping limit+count — a narrow-table job over doc span
     metadata only, cheap relative to the media scan it gates — and picks."""
+    ocr_udf = make_ocr_udf(weights_bc, cfg, min_text_size, on_error)
     spark = media.sparkSession
     auto_layout = ocr_partitions is None
     if ocr_partitions is None:
@@ -296,24 +274,7 @@ def ocr_media_lines(
         pages = media.repartition(ocr_partitions, "media_ref").join(
             refs.hint("shuffle_hash"), "media_ref"
         )
-    return pages.mapInPandas(
-        make_ocr_udf(weights_bc, cfg, min_text_size, emit_metrics, on_error),
-        schema=OCR_LINES_SCHEMA,
-    )
-
-
-def split_ocr_metrics(lines: DataFrame):
-    """(data_pages, metrics) from an emit_metrics=True OCR output.
-    metrics: (partition_id, pages, wall_ms, errors)."""
-    data = lines.filter(F.col("media_ref") != METRICS_SENTINEL)
-    blob = F.split(F.col("lines").getItem(0), r"\|")
-    metrics = lines.filter(F.col("media_ref") == METRICS_SENTINEL).select(
-        blob.getItem(0).cast("int").alias("partition_id"),
-        blob.getItem(1).cast("long").alias("pages"),
-        blob.getItem(2).cast("long").alias("wall_ms"),
-        F.coalesce(blob.getItem(3).cast("long"), F.lit(0)).alias("errors"),
-    )
-    return data, metrics
+    return pages.mapInPandas(ocr_udf, schema=OCR_LINES_SCHEMA)
 
 
 def extract_spans(

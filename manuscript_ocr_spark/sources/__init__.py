@@ -4,7 +4,8 @@ Readers: parquet fixture tables (S1-S2 analog: the media table IS the
 decodable image source; binary-file directory scans map to
 spark.read.format('binaryFile') when images live on a filesystem).
 Sinks: extraction output parquet (pipeline / checkpoint), visualization
-sink (S8), metrics sink (S9: split_ocr_metrics + checkpoint manifests).
+sink (S8), metrics sink (S9: checkpoint manifests; OCR pages that fail under
+on_error="skip" come back as rows with a non-null `error`).
 """
 
 from __future__ import annotations
@@ -54,13 +55,14 @@ def media_from_raw_files(spark: SparkSession, dir_glob: str) -> DataFrame:
 
 
 def write_visualizations(media: DataFrame, weights: dict, cfg, out_path: str):
-    """S8 debug sink: render detection boxes + reading order onto each page,
-    write (media_ref, width, height, vis binary) parquet."""
+    """S8 debug sink: render the boxes the weights' backend detects + their
+    reading order onto each page, write (media_ref, width, height, vis
+    binary) parquet. Order labels use the stand-in glyph bank, which every
+    weights kind can draw with."""
     import numpy as np
     import pandas as pd
 
     from ..models.glyphs import serialize_weights
-    from ..pipeline import make_ocr_udf  # noqa: F401 (session confs shared)
 
     spark = media.sparkSession
     wbc = spark.sparkContext.broadcast(serialize_weights(weights))
@@ -68,18 +70,20 @@ def write_visualizations(media: DataFrame, weights: dict, cfg, out_path: str):
     def vis_batches(iterator):
         from ..kernels.ordering import reading_order_indices
         from ..kernels.vis import visualize_page
-        from ..models.east_tiny import DetectorConfig, detect_quads
+        from ..models.backend import load_backend
+        from ..models.glyphs import build_weights
         from ..oracle import decode_media
         from ..pipeline import _get_weights
 
-        w = _get_weights(wbc.value)
+        detect = load_backend(_get_weights(wbc.value)).detect
+        glyph_bank = build_weights()
         for pdf in iterator:
             refs, widths, heights, blobs = [], [], [], []
             for ref, h, wd, c, px in zip(
                 pdf["media_ref"], pdf["height"], pdf["width"], pdf["channels"], pdf["pixels"]
             ):
                 img = decode_media(px, int(h), int(wd), int(c))
-                quads = detect_quads(img, cfg)
+                quads = detect(img, cfg)
                 boxes = []
                 for q in quads:
                     poly = np.array(q[:8].reshape(4, 2), dtype=np.int32)
@@ -89,7 +93,7 @@ def write_visualizations(media: DataFrame, weights: dict, cfg, out_path: str):
                     )
                 order = reading_order_indices(boxes)
                 ordered = quads[order] if len(order) else quads
-                vis = visualize_page(img, ordered, w, show_order=True)
+                vis = visualize_page(img, ordered, glyph_bank, show_order=True)
                 refs.append(ref)
                 widths.append(int(wd))
                 heights.append(int(h))

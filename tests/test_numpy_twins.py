@@ -477,3 +477,46 @@ def test_page_path_leaves_weights_untouched(kind):
     lines2 = page_to_line_texts(img, w, cfg)
     assert lines1 == lines2
     assert _key_tree(w) == before
+
+
+@pytest.mark.parametrize("kind", ["standin", "real_models"])
+def test_write_visualizations_draws_backend_quads(spark, real_weights, kind, tmp_path):
+    """The S8 sink draws what the weights' backend detects (not the stand-in
+    detector whatever the weights), labelled with the stand-in glyph bank —
+    real_models weights carry no glyphs of their own."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from manuscript_ocr_spark.fixtures import PAGE_SIZE, ensure_tier
+    from manuscript_ocr_spark.kernels.ordering import reading_order_indices
+    from manuscript_ocr_spark.kernels.vis import visualize_page
+    from manuscript_ocr_spark.models.backend import load_backend
+    from manuscript_ocr_spark.models.east_tiny import DetectorConfig
+    from manuscript_ocr_spark.models.glyphs import build_weights
+    from manuscript_ocr_spark.oracle import decode_media
+    from manuscript_ocr_spark.sources import write_visualizations
+
+    w = build_weights() if kind == "standin" else real_weights
+    cfg = DetectorConfig(target_size=PAGE_SIZE)
+    refs = ["page-0000", "page-0001", "page-0002"]
+    media = spark.read.parquet(f"{ensure_tier('sf-small')}/media.parquet").where(
+        F.col("media_ref").isin(refs)
+    )
+    out = str(tmp_path / "vis")
+    write_visualizations(media, w, cfg, out)
+
+    got = {r["media_ref"]: r for r in pq.read_table(out).to_pylist()}
+    assert sorted(got) == refs
+    detect = load_backend(w).detect
+    for m in media.collect():
+        img = decode_media(m["pixels"], m["height"], m["width"], m["channels"])
+        quads = detect(img, cfg)
+        boxes = [
+            (int(p[:, 0].min()), int(p[:, 1].min()), int(p[:, 0].max()), int(p[:, 1].max()))
+            for p in (q[:8].reshape(4, 2).astype(np.int32) for q in quads)
+        ]
+        order = reading_order_indices(boxes)
+        want = visualize_page(img, quads[order] if len(order) else quads, build_weights())
+        r = got[m["media_ref"]]
+        assert (r["height"], r["width"]) == want.shape
+        assert r["vis"] == want.tobytes()

@@ -90,34 +90,59 @@ def test_ocr_task_metrics(spark, small_tables):
     from manuscript_ocr_spark.models.glyphs import build_weights, serialize_weights
     from manuscript_ocr_spark.models.east_tiny import DetectorConfig
     from manuscript_ocr_spark.fixtures import PAGE_SIZE
-    from manuscript_ocr_spark.pipeline import ocr_media_lines, split_ocr_metrics
+    from manuscript_ocr_spark.pipeline import ocr_media_lines
 
     docs, media = small_tables
     wbc = spark.sparkContext.broadcast(serialize_weights(build_weights()))
     refs = media.select("media_ref").distinct()
-    lines = ocr_media_lines(
-        media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE), emit_metrics=True
-    )
-    data, metrics = split_ocr_metrics(lines)
-    m = metrics.collect()
+    lines = ocr_media_lines(media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE))
+    m = lines.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     assert len(m) >= 1
-    assert sum(r["pages"] for r in m) == media.count()
-    assert all(r["wall_ms"] >= 0 and r["partition_id"] >= 0 for r in m)
-    # data rows are unaffected by the sentinel
-    assert data.filter(F.col("media_ref").startswith("__")).count() == 0
+    assert sum(r["count"] for r in m) == media.count()
+    assert all(r["pid"] >= 0 for r in m)
+    assert lines.filter(F.col("error").isNotNull()).count() == 0
+
+
+def test_unknown_on_error_rejected_before_any_job(spark, small_tables):
+    """A typo like on_error="quarantine" must not silently behave as
+    "fail": ocr_media_lines rejects it on the driver, before any job."""
+    import time
+
+    from manuscript_ocr_spark.fixtures import PAGE_SIZE
+    from manuscript_ocr_spark.models import DetectorConfig, build_weights, serialize_weights
+    from manuscript_ocr_spark.pipeline import ocr_media_lines
+
+    docs, media = small_tables
+    wbc = spark.sparkContext.broadcast(serialize_weights(build_weights()))
+    refs = media.select("media_ref").distinct()
+    sc = spark.sparkContext
+    group = "on-error-typo"
+    sc.setJobGroup(group, "ocr_media_lines with an unknown on_error")
+    try:
+        with pytest.raises(ValueError, match="'fail' or 'skip'"):
+            ocr_media_lines(
+                media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE),
+                on_error="quarantine",
+            )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    time.sleep(1)  # let the status store catch up with any stray job
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_on_error_skip_counts_corrupt_pages(spark, small_tables, tmp_path):
     """A corrupt payload fails the job in 'fail' mode (reference raises on
-    bad input) and is skipped-and-counted in 'skip' mode (the 10^12-scale
-    posture: a handful of bad blobs must not kill the run)."""
+    bad input) and comes back as a row with null lines and a non-null error
+    in 'skip' mode (the 10^12-scale posture: a handful of bad blobs must not
+    kill the run, nor vanish)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.errors.exceptions.captured import PythonException
 
     from manuscript_ocr_spark.fixtures import PAGE_SIZE
     from manuscript_ocr_spark.models import DetectorConfig, build_weights, serialize_weights
-    from manuscript_ocr_spark.pipeline import ocr_media_lines, split_ocr_metrics
+    from manuscript_ocr_spark.pipeline import ocr_media_lines
 
     docs, media = small_tables
     # corrupt table: 3 good pages + 1 truncated payload
@@ -144,14 +169,13 @@ def test_on_error_skip_counts_corrupt_pages(spark, small_tables, tmp_path):
     with pytest.raises(PythonException, match="raw payload is"):
         ocr_media_lines(bad_media, refs, wbc, cfg, on_error="fail").count()
 
-    lines = ocr_media_lines(
-        bad_media, refs, wbc, cfg, emit_metrics=True, on_error="skip"
-    )
-    data, metrics = split_ocr_metrics(lines)
-    m = metrics.collect()
-    assert sum(r["errors"] for r in m) == 1
-    assert sum(r["pages"] for r in m) == 3
-    assert data.select("media_ref").distinct().count() <= 3
+    got = ocr_media_lines(bad_media, refs, wbc, cfg, on_error="skip").collect()
+    assert sorted(r["media_ref"] for r in got) == sorted(tbl["media_ref"].to_pylist())
+    bad = [r for r in got if r["error"] is not None]
+    assert [r["media_ref"] for r in bad] == ["page-bad"]
+    assert bad[0]["lines"] is None
+    assert bad[0]["error"].startswith("ValueError: raw payload is")
+    assert all(r["lines"] is not None for r in got if r["error"] is None)
 
 
 def test_incremental_streaming_matches_batch(spark, small_tables, tmp_path):
@@ -427,16 +451,12 @@ def test_dangling_media_ref_drops_span_keeps_doc(spark, small_tables):
 def test_hot_page_skew_ocr_runs_once(spark, small_tables):
     """Worst-case skew: EVERY doc references the SAME page. The distinct-ref
     design means the hot page is OCR'd exactly once regardless of fan-in
-    (metrics pages == 1), and each doc still gets its full span set — the
+    (one OCR output row), and each doc still gets its full span set — the
     north_rule skew tier ('pages with dense line counts' / hot docs) is
     defused structurally, not by salting alone."""
     from manuscript_ocr_spark.fixtures import PAGE_SIZE
     from manuscript_ocr_spark.models import DetectorConfig, build_weights, serialize_weights
-    from manuscript_ocr_spark.pipeline import (
-        extract_spans,
-        ocr_media_lines,
-        split_ocr_metrics,
-    )
+    from manuscript_ocr_spark.pipeline import extract_spans, ocr_media_lines
     from pyspark.sql.types import StringType
 
     docs, media = small_tables
@@ -469,11 +489,8 @@ def test_hot_page_skew_ocr_runs_once(spark, small_tables):
         .select(F.col("s.media_ref").alias("media_ref"))
         .distinct()
     )
-    lines = ocr_media_lines(
-        media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE), emit_metrics=True
-    )
-    _, metrics = split_ocr_metrics(lines)
-    assert sum(r["pages"] for r in metrics.collect()) == 1
+    lines = ocr_media_lines(media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE))
+    assert lines.count() == 1
 
 
 def test_crash_mid_write_leaves_uncommitted_recomputable(
