@@ -5,7 +5,8 @@ import pytest
 def spark():
     from manuscript_ocr_spark.session import get_spark
 
-    s = get_spark(master="local[*]", app_name="manuscript-ocr-spark-tests")
+    # master local[$SPARK_GRAFT_CPUS], local[*] when unset
+    s = get_spark(app_name="manuscript-ocr-spark-tests")
     yield s
     s.stop()
 
