@@ -2113,7 +2113,9 @@ PQ_JOIN_TOPK = 5        # neighbors per query
 # pair carries an M·K int64 table (32·32·8 = 8 KiB), so 8192 pairs ≈ 64 MiB
 # — about the largest broadcast worth shipping to every executor. Above
 # that the same plan falls back to a shuffle join on cell (round-5 verdict
-# item 4; the pipeline.MAX_BROADCAST_REFS probe pattern).
+# item 4). This gate counts the query rows with one job; the OCR refs join
+# gates on Spark's own plan statistics instead, with no job
+# (pipeline._fits_broadcast).
 MAX_BROADCAST_ADC_ROWS = 8192
 
 

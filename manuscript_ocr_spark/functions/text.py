@@ -227,7 +227,7 @@ def boilerplate_strip(spark, sf_dir):
 
     return _docs(spark, sf_dir).select(
         "doc_id",
-        strip_boilerplate_col(F.col("text")).alias("clean_text"),
+        strip_boilerplate_col("text").alias("clean_text"),
     )
 
 
@@ -260,7 +260,7 @@ def edit_distance(spark, sf_dir):
     df = _docs(spark, sf_dir).select(
         "doc_id",
         F.col("text"),
-        strip_boilerplate_col(F.col("text")).alias("clean"),
+        strip_boilerplate_col("text").alias("clean"),
     )
     return df.select(
         "doc_id",

@@ -8,19 +8,25 @@ equal the single-process oracle's per document — the north-rule invariant.
 
 Plan shape (scale rationale, SURVEY.md §7):
 
-    docs ──explode──┬─ text spans ── regexp_replace/trim (JVM, codegen) ──┐
-                    └─ media spans ─ distinct refs ──broadcast──┐         │
-    media ──────────── semi join (scan prunes to referenced) ───┤         │
-                        page layout (see below) [skew defusal]  │         │
-                        mapInPandas OCR UDF  [weights broadcast]│         │
-                    media spans ⋈ ocr lines (media_ref) ────────┴─ union ─┤
-    groupBy(doc_id) → sort_array(collect_list(struct)) → left join docs ──┘
+    docs ─┬─ no media span ── strip/filter/sort (one SQL expression) ─────────┐
+          ├─ media spans ── refs ──broadcast──┐                              │
+          │  media ── left semi join (scan prunes to referenced)             │
+          │           page layout (see below) [skew defusal]                 │
+          │           mapInPandas OCR UDF  [weights broadcast]               │
+          │  media spans ⋈ ocr lines (media_ref) ──┐                         │
+          └─ text spans of docs with media ─── union ──┐                     │
+             groupBy(doc_id) → sort_array(flatten(collect_list(spans))) ── union
 
+- No Spark job runs before the write: the refs join picks broadcast or
+  shuffle-hash from Spark's own plan statistics (ocr_media_lines), with
+  no size probe.
 - Every distinct page is OCR'd exactly ONCE no matter how many docs
-  reference it (the scan is pruned by a semi-join of referenced refs —
-  broadcast while refs fit (size-probed), shuffle-hash beyond that: at
-  10^12-doc scale the distinct ref set is itself billions of rows and a
-  forced broadcast would OOM the driver).
+  reference it: the scan is pruned by a left semi-join against the
+  referenced refs — broadcast while the refs plan is estimated under
+  spark.sql.autoBroadcastJoinThreshold (the broadcast hash relation drops
+  duplicate refs), shuffle-hash on distinct refs beyond that: at
+  10^12-doc scale the ref set is itself billions of rows and a forced
+  broadcast would OOM the driver.
 - The heavy per-row work is laid out BEFORE the UDF by one of four page
   layouts (ocr_media_lines): a small scan is round-robin-compacted to one
   task per core; a coarse scan (few huge splits) and the shuffle-hash path
@@ -29,12 +35,17 @@ Plan shape (scale rationale, SURVEY.md §7):
   pages (skew tier) would otherwise pile into few tasks; a fine-grained
   scan feeds the UDF straight from its splits, with no payload shuffle.
   An explicit ocr_partitions always hash-spreads to that many partitions.
-- At most two shuffles touch wide data: the page layout's repartition (when
-  one is picked) and the final per-doc regroup; the boilerplate strip and
-  all filters stay in whole-stage-codegen JVM expressions.
+- OCR rows (one per referencing span, lines already expanded to spans)
+  and the text rows of docs with media spans meet in ONE aggregate per
+  doc_id; a doc with no media span never leaves its row. At most two
+  shuffles touch wide data: the page layout's repartition (when one is
+  picked) and that regroup. The boilerplate strip and all filters stay in
+  whole-stage-codegen JVM expressions.
 """
 
 from __future__ import annotations
+
+import functools
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -127,23 +138,99 @@ def make_ocr_udf(
     return ocr_batches
 
 
-def strip_boilerplate_col(col):
-    """JVM-side boilerplate strip — MUST stay in lockstep with
-    kernels.textproc.strip_boilerplate (same regexes; Java regex and Python
-    re agree on these patterns, fixture text is ASCII so \\s semantics
-    coincide)."""
-    cleaned = col
+def _strip_boilerplate_sql(x: str) -> str:
+    """JVM-side boilerplate strip of the SQL expression `x`, as SQL text —
+    built from the same regexes as kernels.textproc.strip_boilerplate (Java
+    regex and Python re agree on these patterns, fixture text is ASCII so
+    \\s semantics coincide; raw r'...' literals: no escape processing)."""
     for tag in BOILERPLATE_TAGS:
-        cleaned = F.regexp_replace(cleaned, BOILERPLATE_TAG_RES[tag], "")
-    cleaned = F.regexp_replace(cleaned, WHITESPACE_RE, " ")
-    return F.trim(cleaned)
+        x = f"regexp_replace({x}, r'{BOILERPLATE_TAG_RES[tag]}', '')"
+    return f"trim(regexp_replace({x}, r'{WHITESPACE_RE}', ' '))"
 
 
-# Above this many distinct referenced pages, the refs side is too big to
-# broadcast (10^12-doc corpora have billions of distinct media_refs — a
-# forced broadcast OOMs the driver); the join falls back to a shuffle-hash
-# join whose exchange doubles as the skew-spreading repartition.
-MAX_BROADCAST_REFS = 1_000_000
+def strip_boilerplate_col(name: str):
+    """The boilerplate strip of column `name` (see _strip_boilerplate_sql)."""
+    return F.expr(_strip_boilerplate_sql(name))
+
+
+# The higher-order columns as SQL text, built once: one F.expr each
+# instead of a Python-lambda F.transform/F.filter chain (hundreds of py4j
+# round trips per extract_spans call). Sortable span structs lead with
+# (offset, seq) so sort_array orders them; _sorted_spans reorders the fields.
+#
+# Text spans never leave their document row: strip + filter happen INSIDE
+# the spans array (zero shuffle before the regroup).
+TEXT_SPANS_SQL = f"""filter(
+    transform(filter(spans, s -> s.kind = 'text'),
+              s -> named_struct('offset', cast(s.offset as int), 'seq', 0,
+                                'kind', '{KIND_TEXT}',
+                                'text', {_strip_boilerplate_sql('s.text')},
+                                'media_ref', cast(null as string))),
+    s -> s.text is not null and length(s.text) > 0)"""
+
+# One array row per (span, page) pair: the page's lines expanded to spans
+# inside the array (no explode: the regroup shuffles page-granularity rows).
+OCR_SPANS_SQL = f"""transform(lines, (x, i) -> named_struct(
+    'offset', offset, 'seq', i, 'kind', '{KIND_OCR}', 'text', x,
+    'media_ref', media_ref))"""
+
+HAS_MEDIA_SQL = "exists(spans, s -> s.kind = 'media')"
+
+
+def _sorted_spans(x: str) -> str:
+    return f"""transform(sort_array({x}),
+    s -> named_struct('kind', s.kind, 'text', s.text, 'media_ref', s.media_ref,
+                      'offset', s.offset, 'seq', s.seq))"""
+
+
+# a doc with media spans: its OCR rows and text row, regrouped per doc_id
+REGROUP_SQL = _sorted_spans("flatten(collect_list(spans))")
+# a doc without media spans (or with null spans): its text row as it is
+TEXT_ONLY_SQL = _sorted_spans(TEXT_SPANS_SQL)
+
+
+@functools.lru_cache(maxsize=None)
+def _default_weights_blob() -> bytes:
+    weights = build_weights()
+    load_backend(weights)
+    return serialize_weights(weights)
+
+
+_DEFAULT_WEIGHTS_BC: list = []  # [(SparkContext, Broadcast)] of the live context
+
+
+def _broadcast_weights(sc, weights: dict | None):
+    """The weights broadcast for one extract_spans call. Custom weights are
+    validated on the driver (before any task runs) and broadcast per call;
+    the default weights are built, validated and serialized once per
+    process and broadcast once per live SparkContext."""
+    if weights is not None:
+        load_backend(weights)
+        return sc.broadcast(serialize_weights(weights))
+    if not (_DEFAULT_WEIGHTS_BC and _DEFAULT_WEIGHTS_BC[0][0] is sc and sc._jsc is not None):
+        _DEFAULT_WEIGHTS_BC[:] = [(sc, sc.broadcast(_default_weights_blob()))]
+    return _DEFAULT_WEIGHTS_BC[0][1]
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Spark's own rule for an automatic broadcast, with no job: the
+    optimized plan's size estimate is known and within
+    spark.sql.autoBroadcastJoinThreshold (-1 disables). An unknown size
+    estimates as Long.MaxValue, so it never broadcasts.
+
+    The estimate is the scanned files' compressed bytes scaled by default
+    column widths, so for exploded media-span refs it is NOT a bound on the
+    bytes broadcast (test_refs_estimate_against_real_size). It does not see
+    duplicates, which the broadcast path collects to the driver (compressed
+    per partition) before its hash relation drops them: 100,000 refs over
+    60 page ids measured 1,644x their estimate. Distinct refs with
+    sequential ids compress to about a byte each: ~290x under their row
+    bytes (40,000 URI-like refs), i.e. up to ~3 GB of distinct refs under
+    the 10 MB default threshold."""
+    jdf = df._jdf
+    size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+
 
 # Small-scan compaction gate for the OCR stage: only when the WHOLE media
 # scan is under this many file bytes may the pipeline round-robin-compact
@@ -153,59 +240,19 @@ MAX_BROADCAST_REFS = 1_000_000
 # _spread_small_scan.
 OCR_COMPACT_MAX_BYTES = 256 << 20
 
-_SIZE_SUFFIXES = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _parse_bytes(v: str) -> int:
-    """'512k' / '128m' / '134217728b' / '128MB' → bytes."""
-    s = str(v).strip().lower()
-    for suf in ("kb", "mb", "gb", "tb"):
-        if s.endswith(suf):
-            return int(float(s[:-2]) * _SIZE_SUFFIXES[suf[0]])
-    if s and s[-1] in _SIZE_SUFFIXES:
-        return int(float(s[:-1]) * _SIZE_SUFFIXES[s[-1]])
-    return int(float(s))
-
 
 def _scan_split_estimate(df: DataFrame, spark: SparkSession) -> tuple:
-    """(estimated scan-split count, total file bytes) for a file-backed
-    DataFrame, from the catalog's file list + spark.sql.files.
-    maxPartitionBytes — the same inputs FilePartition packing uses.
-    Replaces an .rdd.getNumPartitions() probe (round-3 verdict item #7: no
-    RDD-API access anywhere — converting the plan to an RDD builds and
-    caches a legacy execution path).
-
-    Local file: URIs are stat'ed directly; for remote filesystems (no cheap
-    stat from Python) each file conservatively counts as one split and
-    contributes unknown (0) bytes — a LOWER bound on splits, which errs
-    toward adding the repartition, and an unknown size that disables the
-    small-scan compaction — both the safe direction."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = df.inputFiles()
-    if not files:
+    """(scan-split count, file bytes) of the file scans under `df`, read
+    from its physical plan with no job: each FileSourceScanExec's own
+    partitions (Spark's FilePartition packing at this session's core count)
+    and its relation's file bytes. No file scan: (defaultParallelism, 0)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    scans = [s for s in scans if s.getClass().getSimpleName() == "FileSourceScanExec"]
+    if not scans:
         return spark.sparkContext.defaultParallelism, 0
-    max_bytes = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    splits = 0
-    total = 0
-    remote = False
-    for uri in files:
-        p = urlparse(uri)
-        if p.scheme in ("file", ""):
-            try:
-                size = os.path.getsize(unquote(p.path))
-            except OSError:
-                size = 0
-            total += size
-            splits += max(1, -(-size // max_bytes))
-        else:
-            splits += 1
-            remote = True
-    # unknown remote sizes: report "huge" so byte-gated compaction stays off
-    return splits, (1 << 62) if remote else total
+    return (sum(s.inputRDD().getNumPartitions() for s in scans),
+            sum(int(s.relation().sizeInBytes()) for s in scans))
 
 
 def ocr_media_lines(
@@ -217,19 +264,20 @@ def ocr_media_lines(
     ocr_partitions: int | None = None,
     on_error: str = "fail",
     broadcast_refs: bool | None = None,
-    max_broadcast_refs: int = MAX_BROADCAST_REFS,
 ) -> DataFrame:
-    """OCR every page in `media` that appears in `refs` (distinct media_ref
-    column) → DataFrame(media_ref, lines array<string>, error string), one
-    row per page, each page exactly once, line order inside the array.
-    on_error: see make_ocr_udf. Pages per task:
+    """OCR every page in `media` whose media_ref appears in `refs` (a
+    media_ref column; duplicates allowed) → DataFrame(media_ref, lines
+    array<string>, error string), one row per page, each page exactly once,
+    line order inside the array. on_error: see make_ocr_udf. Pages per task:
     groupBy(F.spark_partition_id()).count() over the result; task wall
     times are in Spark's own task metrics (event log).
 
-    broadcast_refs: True forces a broadcast semi-join (refs known small),
-    False forces the shuffle-hash path, None (default) probes the refs size
-    with an early-stopping limit+count — a narrow-table job over doc span
-    metadata only, cheap relative to the media scan it gates — and picks.
+    broadcast_refs: True forces a broadcast left semi-join (the broadcast
+    hash relation drops duplicate refs), False the shuffle-hash join on
+    distinct refs; None (default) applies Spark's own broadcast rule with
+    no job (_fits_broadcast): broadcast when the refs plan's size estimate
+    is within spark.sql.autoBroadcastJoinThreshold, shuffle-hash when it
+    is larger or unknown (or the threshold is -1).
 
     ocr_partitions: None (default) is the auto layout, with
     cores = defaultParallelism. On the broadcast path a small scan (under
@@ -243,37 +291,34 @@ def ocr_media_lines(
     spark = media.sparkSession
     cores = spark.sparkContext.defaultParallelism
     if broadcast_refs is None:
-        # limit+count submits incrementally (scaleUpFactor) and never
-        # materializes more than max+1 rows: tiny job when refs is small,
-        # early stop when it is huge
-        broadcast_refs = (
-            refs.limit(max_broadcast_refs + 1).count() <= max_broadcast_refs
-        )
+        broadcast_refs = _fits_broadcast(refs)
     if not broadcast_refs:
-        # Shuffle-hash join, refs as build side: media is hash-partitioned on
-        # media_ref by the join exchange itself, which IS the skew-spreading
-        # repartition — no second payload shuffle. SMJ is explicitly avoided:
-        # sorting multi-MB payload rows costs far more than hashing them.
-        # Auto width: per-page cost is heavy-tailed (dense pages ~10x the
-        # median), so the stage wall time is the max partition cost — aim
-        # for several partitions per core to keep the straggler tail shallow.
+        # Shuffle-hash join, distinct refs as build side (the distinct's
+        # partial aggregation keeps the build side bounded): media is
+        # hash-partitioned on media_ref by the join exchange itself, which IS
+        # the skew-spreading repartition — no second payload shuffle. SMJ is
+        # explicitly avoided: sorting multi-MB payload rows costs far more
+        # than hashing them. Auto width: per-page cost is heavy-tailed (dense
+        # pages ~10x the median), so the stage wall time is the max partition
+        # cost — aim for several partitions per core to keep the straggler
+        # tail shallow.
         width = cores * 8 if ocr_partitions is None else ocr_partitions
         pages = media.repartition(width, "media_ref").join(
-            refs.hint("shuffle_hash"), "media_ref"
+            refs.distinct().hint("shuffle_hash"), "media_ref"
         )
     elif ocr_partitions is not None:
         # an explicit layout is honoured whatever the scan looks like
-        pages = media.join(F.broadcast(refs), "media_ref").repartition(
+        pages = media.join(F.broadcast(refs), "media_ref", "left_semi").repartition(
             ocr_partitions, "media_ref"
         )
     else:
-        pages = media.join(F.broadcast(refs), "media_ref")
+        pages = media.join(F.broadcast(refs), "media_ref", "left_semi")
         # Spread the heavy per-page work. If the parquet scan already yields
         # fine-grained splits (small row groups + low maxPartitionBytes), feed
         # the UDF straight from the scan — shuffling multi-MB page payloads
         # costs more than it balances. Only force a repartition when the
         # scan is coarser than the cores it must feed (e.g. few huge files).
-        # The estimate comes from the catalog's file list, not an RDD probe.
+        # The split count is the one Spark plans for the scan, with no job.
         scan_parts, scan_bytes = _scan_split_estimate(media, spark)
         if scan_bytes < OCR_COMPACT_MAX_BYTES and scan_parts < cores * 6:
             # SMALL job whose scan splinters into few, fractional waves
@@ -305,13 +350,15 @@ def extract_spans(
     ocr_partitions: int | None = None,
     weights: dict | None = None,
     broadcast_refs: bool | None = None,
-    max_broadcast_refs: int = MAX_BROADCAST_REFS,
 ) -> DataFrame:
     """The flagship query: docs(doc_id, spans) × media → (doc_id, spans_out).
 
     spans_out: array<struct<kind, text, media_ref, offset, seq>> sorted by
     (offset, seq) — per-doc equal to oracle.doc_to_spans (pytest invariant).
-    Documents whose spans all strip/OCR to nothing keep an empty array.
+    Documents whose spans all strip/OCR to nothing keep an empty array; a
+    document whose spans is null comes out null. Rows that share a doc_id
+    (null included) and hold media spans come out as ONE row holding all
+    their spans; every row without media spans comes out as its own row.
 
     Divergence from the oracle, by design: a media span whose media_ref has
     no row in the media table (dangling ref) is silently OMITTED here (the
@@ -320,47 +367,20 @@ def extract_spans(
     dangling refs must not kill the job — pair with an anti-join audit
     (refs LEFT ANTI media) when lineage requires counting them.
 
+    Building the query starts no Spark job. broadcast_refs: None (default)
+    broadcasts the refs when Spark's plan statistics put them within
+    spark.sql.autoBroadcastJoinThreshold and takes the shuffle-hash join
+    otherwise; True/False force either path (see ocr_media_lines).
+
     ocr_partitions: None (default) lets ocr_media_lines pick the OCR page
     layout from the media scan (one task per core for a small scan, a hash
     spread to cores × 8 for a coarse scan, the scan's own splits
     otherwise); an int always hash-spreads the pages on media_ref to
     exactly that many partitions.
     """
-    spark = docs.sparkSession
     if cfg is None:
         cfg = DetectorConfig()
-    if weights is None:
-        weights = build_weights()
-    load_backend(weights)  # validate on the driver, before any task runs
-    weights_bc = spark.sparkContext.broadcast(serialize_weights(weights))
-
-    # --- text-span path: array-native, zero shuffle -----------------------
-    # Text spans never leave their document row, so strip + filter happen
-    # INSIDE the spans array with JVM higher-order functions; only OCR spans
-    # (which must route through the media join) ever hit a shuffle. At
-    # 10^12-doc scale, where most spans are text, this roughly halves the
-    # rows through the final regroup exchange versus explode+union.
-    def _to_sortable_text(s):
-        return F.struct(
-            s["offset"].cast("int").alias("offset"),
-            F.lit(0).cast("int").alias("seq"),
-            F.lit(KIND_TEXT).alias("kind"),
-            strip_boilerplate_col(s["text"]).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-        )
-
-    base = docs.select(
-        "doc_id",
-        F.filter(
-            F.transform(
-                F.filter("spans", lambda s: s["kind"] == "text"),
-                _to_sortable_text,
-            ),
-            lambda s: s["text"].isNotNull() & (F.length(s["text"]) > 0),
-        ).alias("tspans"),
-    )
-
-    # --- media-span path: OCR each distinct page once ----------------------
+    weights_bc = _broadcast_weights(docs.sparkSession.sparkContext, weights)
     media_spans = (
         docs.select("doc_id", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "media")
@@ -370,72 +390,33 @@ def extract_spans(
             F.col("s.offset").cast("int").alias("offset"),
         )
     )
-    refs = media_spans.select("media_ref").distinct()
-
-    if broadcast_refs is None:
-        # two-tier probe: the UNdeduped media-span count upper-bounds the
-        # distinct ref count and costs one narrow early-stopping scan (no
-        # shuffle); only past the threshold pay the exact distinct probe
-        # (dup-heavy corpora can still dedup under the broadcast limit)
-        upper = media_spans.limit(max_broadcast_refs + 1).count()
-        if upper <= max_broadcast_refs:
-            broadcast_refs = True
-
     ocr_lines = ocr_media_lines(
         media,
-        refs,
+        media_spans.select("media_ref"),
         weights_bc,
         cfg,
         min_text_size,
         ocr_partitions,
         broadcast_refs=broadcast_refs,
-        max_broadcast_refs=max_broadcast_refs,
     )
-
-    # lines arrive as ONE array row per page; expand to (offset, seq, ...)
-    # structs inside the array (JVM transform-with-index — no explode, so the
-    # per-doc regroup shuffles page-granularity rows, not line-granularity)
-    ocr_grouped = (
-        media_spans.join(ocr_lines, "media_ref")
-        .select(
-            "doc_id",
-            F.transform(
-                "lines",
-                lambda x, i: F.struct(
-                    F.col("offset"),
-                    i.cast("int").alias("seq"),
-                    F.lit(KIND_OCR).alias("kind"),
-                    x.alias("text"),
-                    F.col("media_ref"),
-                ),
-            ).alias("pspans"),
-        )
+    # OCR rows first: the union's docs-side task then starts after the long
+    # OCR tasks, not ahead of them. Only docs with media spans cross the
+    # regroup exchange; text-only docs are finished in place.
+    has_media = F.expr(HAS_MEDIA_SQL)
+    ocr_rows = media_spans.join(ocr_lines, "media_ref").select(
+        "doc_id", F.expr(OCR_SPANS_SQL).alias("spans")
+    )
+    text_rows = docs.filter(has_media).select(
+        "doc_id", F.expr(TEXT_SPANS_SQL).alias("spans")
+    )
+    text_only = docs.filter(~F.coalesce(has_media, F.lit(False))).select(
+        "doc_id", F.expr(TEXT_ONLY_SQL).alias("spans")
+    )
+    return (
+        ocr_rows.union(text_rows)
         .groupBy("doc_id")
-        .agg(F.flatten(F.collect_list("pspans")).alias("ospans"))
-    )
-
-    # --- merge: concat both arrays, sort by (offset, seq), reorder fields --
-    empty = F.expr(
-        "cast(array() as array<struct<offset:int,seq:int,kind:string,"
-        "text:string,media_ref:string>>)"
-    )
-    merged = base.join(ocr_grouped, "doc_id", "left").select(
-        "doc_id",
-        F.sort_array(F.concat("tspans", F.coalesce("ospans", empty))).alias("raw"),
-    )
-
-    return merged.select(
-        "doc_id",
-        F.transform(
-            "raw",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-                s["seq"].alias("seq"),
-            ),
-        ).alias("spans"),
+        .agg(F.expr(REGROUP_SQL).alias("spans"))
+        .union(text_only)
     )
 
 

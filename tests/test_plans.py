@@ -60,29 +60,44 @@ def test_media_prune_is_broadcast(tables):
 
 
 def test_text_only_path_has_zero_shuffles(tables):
-    """The array-native text path: strip + filter inside the spans array.
-    A docs table with no media spans must plan with NO shuffle exchange at
-    all before the (empty) ocr join — assert on the text-branch subplan."""
+    """The array-native text path: strip + filter + sort inside the spans
+    array. The expression extract_spans itself uses for docs with no media
+    span must plan with NO shuffle exchange at all."""
     docs, _ = tables
-    from manuscript_ocr_spark.pipeline import strip_boilerplate_col
+    from manuscript_ocr_spark.pipeline import HAS_MEDIA_SQL, TEXT_ONLY_SQL
 
-    def _to_sortable(s):
-        return F.struct(
-            s["offset"].alias("offset"),
-            strip_boilerplate_col(s["text"]).alias("text"),
-        )
-
-    base = docs.select(
-        "doc_id",
-        F.filter(
-            F.transform(
-                F.filter("spans", lambda s: s["kind"] == "text"), _to_sortable
-            ),
-            lambda s: F.length(s["text"]) > 0,
-        ).alias("tspans"),
+    text_rows = docs.filter(~F.expr(HAS_MEDIA_SQL)).select(
+        "doc_id", F.expr(TEXT_ONLY_SQL).alias("spans")
     )
-    assert exchanges(base) == 0
-    assert codegen_stages(base) >= 1
+    assert exchanges(text_rows) == 0
+    assert codegen_stages(text_rows) >= 1
+
+
+def test_text_spans_sql_strips_like_python(spark):
+    """TEXT_SPANS_SQL strips like the Python strip, span by span (empty
+    results dropped)."""
+    from manuscript_ocr_spark.kernels.textproc import strip_boilerplate
+    from manuscript_ocr_spark.pipeline import TEXT_SPANS_SQL
+
+    texts = [
+        "Intro {{nav}}home | about{{/nav}} body   text {{footer}}(c) 2026{{/footer}} end",
+        "{{header}}\nBig\nBanner\n{{/header}}keep {{ad}}buy!{{/ad}} this",
+        "  plain\t text\n",
+        "a {{nav}} b",
+        "{{nav}}x{{/nav}}",
+        "",
+        None,
+    ]
+    spans = [{"kind": "text", "text": t, "media_ref": None, "offset": i}
+             for i, t in enumerate(texts)]
+    docs = spark.createDataFrame(
+        [("d", spans)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    (row,) = docs.select(F.expr(TEXT_SPANS_SQL).alias("spans")).collect()
+    want = [(i, strip_boilerplate(t)) for i, t in enumerate(texts) if strip_boilerplate(t)]
+    assert [(s["offset"], s["text"]) for s in row["spans"]] == want
 
 
 def test_relational_queries_stay_in_codegen(spark):

@@ -105,3 +105,15 @@ def test_hot_page_still_ocrd_once(spark, skew_tables):
     )
     metrics = _task_metrics(spark, media, refs)
     assert sum(r["pages"] for r in metrics) == 1
+
+
+def test_scan_split_estimate_matches_spark(spark, skew_tables):
+    """The auto layout judges the media scan by _scan_split_estimate: it must
+    equal the split count Spark plans for the scan at this session's core
+    count (FilePartition sizes splits from the total bytes per core)."""
+    from manuscript_ocr_spark.pipeline import _scan_split_estimate
+
+    _, media = skew_tables
+    splits, total = _scan_split_estimate(media, spark)
+    assert splits == media.rdd.getNumPartitions()
+    assert 0 < total
